@@ -273,35 +273,20 @@ def _ranked_shingles(sh: DataFrame) -> DataFrame:
     """(doc_id, ordered) with ``ordered`` = the doc's distinct shingles
     as (df, s) structs sorted rarest-first under the global document-
     frequency order.  This is the shared staging relation of the whole
-    prefix-filter family: it ENDS IN AN EXCHANGE (the groupBy on
-    doc_id), so when a query references it several times — prefix
-    candidates, the super side, verification arrays — the physical
-    planner computes the expensive map side (tokenize → shingle →
-    explode → df annotate) once and replaces every other occurrence
-    with a ReusedExchange over the same shuffle files.
+    prefix-filter family: a lazy ``localCheckpoint`` (note at the end)
+    materializes it once per query run, so the prefix candidates, the
+    super side and the verification arrays all read the same rows.
 
-    The document frequency is a COUNT WINDOW over the exploded table,
-    not a groupBy + join back: the aggregate's column pruning dropped
-    ``doc_id`` from its branch, which de-canonicalized the two scan
-    subtrees and made the planner run the scan → tokenize → shingle →
-    explode map work TWICE (plus broadcast the full exploded relation
-    back for the annotate join — 40 MB at sf0.1).  The window keeps
-    one scan subtree and turns the annotate into the same single
-    shuffle on ``s`` the aggregate needed anyway (plan: 2 Generate ×
-    260 k rows + BroadcastExchange 40 MB → 1 Generate, no broadcast;
-    identical (df, s) output — the window count equals the joined
-    groupBy count row-for-row)."""
-    # The df annotate is an explicit repartition("s") consumed TWICE —
-    # once by the count aggregate, once as the probe side of a
-    # shuffled-hash annotate join — so the expensive map side
-    # (tokenize → shingle → explode) runs once and the second consumer
-    # is a ReusedExchange (the dedup_minhash_lsh trick).  Versus the
-    # previous count-window form this removes the SORT of the full
-    # exploded shingle stream (sort-based WindowExec) that ran inside
-    # the same stage: the aggregate hashes, the join probes a
-    # per-partition hash table of the (distinct-shingle)-sized counts,
-    # and nothing orders the stream until the per-doc sort_array —
-    # identical (df, s) values row-for-row.
+    The document frequency comes from ONE explicit ``repartition("s")``
+    of the exploded (doc_id, s) stream, consumed twice: by the
+    per-shingle count aggregate, and as the probe side of a
+    shuffled-hash join that attaches the count back to every row.
+    Both consumers read the same exchange (the second is a
+    ReusedExchange, the dedup_minhash_lsh trick), so the tokenize →
+    shingle → explode map side runs once; the aggregate hashes, the
+    join probes a per-partition hash table of the distinct-shingle
+    counts, and nothing sorts the exploded stream before the
+    per-document ``sort_array``."""
     ex = sh.select("doc_id", F.explode("shingles").alias("s")).repartition("s")
     counts = ex.groupBy("s").agg(F.count("*").alias("df")).hint("shuffle_hash")
     return (

@@ -45,11 +45,10 @@ def _t(fn):
     return lambda spark, sf_dir: fn(load_tables(spark, sf_dir))
 
 
-_DSUM = "cast(sum(cast({expr} AS DECIMAL(25,6))) AS DOUBLE)"
-
-
 def _dsum(expr: str) -> str:
-    return _DSUM.format(expr=expr)
+    """Order-independent DOUBLE sum: exact DECIMAL accumulation, the
+    oracle twin of relational._dsum."""
+    return f"cast(sum(cast({expr} AS DECIMAL(25,6))) AS DOUBLE)"
 
 
 # --------------------------------------------------------------------------
@@ -299,12 +298,35 @@ def _enrich_events_oracle() -> str:
 # oracles for the training-data operators (dedup / text / similarity)
 # --------------------------------------------------------------------------
 
+#: The whitespace tokenizer over ``text`` ('' and all-whitespace → []):
+#: the DuckDB twin of text.tokens_col.  Written in SQL on purpose, never
+#: derived from tokens_col — the oracle is the independent reference the
+#: Spark side is checked against (tests/test_training_ops.py pins the
+#: two equal on whitespace edge cases).
+_TOKENIZE = r"list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '')"
+
+#: The per-document token relation: every ``documents`` column plus its
+#: token list ``ts``.  DuckDB prunes the columns a query does not read.
+_TL_CTE = f"tl AS (SELECT *, {_TOKENIZE} AS ts FROM documents)"
+
+#: One row per token occurrence: toks(doc_id, token).
+_TOKEN_CTE = f"""{_TL_CTE},
+toks AS (SELECT doc_id, unnest(ts) AS token FROM tl)"""
+
+
+def _adjacent(pair: str) -> str:
+    """``pair`` over each adjacent (ts[i], ts[i+1]) of ``ts``; [] below
+    two tokens."""
+    return f"list_transform(generate_series(1, len(ts) - 1), i -> {pair})"
+
+
+#: Adjacent-token bigrams of ``ts`` joined by one space ('w1 w2').
+_BIGRAMS = _adjacent("ts[i] || ' ' || ts[i+1]")
+
 #: Shared CTE prefix: whitespace tokens and distinct word-3-gram
 #: shingles — the DuckDB twin of text.tokens_col / dedup.shingles_col.
-_TOKS_CTE = r"""toks AS (
-  SELECT doc_id, text,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS t
-  FROM documents),
+_TOKS_CTE = f"""{_TL_CTE},
+toks AS (SELECT doc_id, text, ts AS t FROM tl),
 sh AS (
   SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
     THEN list_transform(generate_series(1, len(t) - 2),
@@ -1021,14 +1043,8 @@ FROM documents""",
     ),
     "ngram_counts": QuerySpec(
         _t(P.ngram_counts),
-        r"""WITH toks AS (
-  SELECT list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS t
-  FROM documents),
-bi AS (
-  SELECT unnest(CASE WHEN len(t) >= 2
-    THEN list_transform(generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i+1])
-    ELSE [] END) AS bigram
-  FROM toks)
+        f"""WITH {_TL_CTE},
+bi AS (SELECT unnest({_BIGRAMS}) AS bigram FROM tl)
 SELECT bigram, count(*) AS n FROM bi GROUP BY bigram HAVING count(*) >= 40""",
         ("pipeline", "text"),
     ),
@@ -1225,14 +1241,11 @@ FROM documents""",
     ),
     "duplicated_span_report": QuerySpec(
         _t(D.duplicated_span_report),
-        r"""WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS t
-  FROM documents),
+        f"""WITH {_TL_CTE},
 g AS (
-  SELECT doc_id, unnest(list_transform(generate_series(1, len(t) - 9),
-         i -> struct_pack(pos := i, span := array_to_string(t[i:i+9], ' ')))) AS u
-  FROM toks WHERE len(t) >= 10),
+  SELECT doc_id, unnest(list_transform(generate_series(1, len(ts) - 9),
+         i -> struct_pack(pos := i, span := array_to_string(ts[i:i+9], ' ')))) AS u
+  FROM tl WHERE len(ts) >= 10),
 gg AS (SELECT doc_id, u.pos AS pos, u.span AS span FROM g)
 SELECT span, count(DISTINCT doc_id) AS n_docs, count(*) AS n_occurrences,
        min(doc_id * 1000000 + pos) // 1000000 AS first_doc_id,
@@ -1253,15 +1266,12 @@ FROM gg GROUP BY span HAVING count(DISTINCT doc_id) >= 2""",
     ),
     "text_token_count": QuerySpec(
         _t(X.text_token_count),
-        r"""WITH toks AS (
-  SELECT doc_id, text,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS t
-  FROM documents)
-SELECT doc_id, len(t) AS n_ws_tokens,
+        rf"""WITH {_TL_CTE}
+SELECT doc_id, len(ts) AS n_ws_tokens,
   len(list_filter(
     regexp_extract_all(text, '''(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+|\s+'),
     x -> NOT regexp_matches(x, '^\s+$'))) AS n_bpe_tokens
-FROM toks""",
+FROM tl""",
         ("text",),
     ),
     "asof_join_last_click": QuerySpec(
@@ -1352,7 +1362,7 @@ FROM agg""",
         _t(R.tpch_q17_small_quantity_revenue),
         f"""WITH thresholds AS (
   SELECT l_partkey AS t_partkey,
-    (cast(sum(cast(l_quantity AS DECIMAL(25,6))) AS DOUBLE) / count(*)) * 0.2
+    ({_dsum('l_quantity')} / count(*)) * 0.2
       AS qty_threshold
   FROM lineitem GROUP BY l_partkey)
 SELECT {_dsum('l_extendedprice')} / 7.0 AS avg_yearly
@@ -1386,8 +1396,7 @@ WHERE (p_brand = 'Brand#11' AND p_size BETWEEN 1 AND 5
     "tpch_q22_idle_customers": QuerySpec(
         _t(R.tpch_q22_idle_customers),
         f"""WITH avg_bal AS (
-  SELECT cast(sum(cast(c_acctbal AS DECIMAL(25,6))) AS DOUBLE) / count(*)
-    AS avg_bal
+  SELECT {_dsum('c_acctbal')} / count(*) AS avg_bal
   FROM customer WHERE c_acctbal > 0.0)
 SELECT c_nationkey, count(*) AS numcust, {_dsum('c_acctbal')} AS totacctbal
 FROM customer, avg_bal
@@ -1467,20 +1476,15 @@ FROM events e JOIN dim USING (event_type) GROUP BY e.event_type""",
     ),
     "text_repetition_stats": QuerySpec(
         _t(X.text_repetition_stats),
-        r"""WITH toks AS (
-  SELECT doc_id,
-    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS t
-  FROM documents),
-nz AS (SELECT doc_id, t FROM toks WHERE len(t) > 0),
+        f"""WITH {_TL_CTE},
+nz AS (SELECT doc_id, ts FROM tl WHERE len(ts) > 0),
 freq AS (
   SELECT doc_id, max(c) AS top, sum(c) AS total, count(*) AS dist FROM (
     SELECT doc_id, tok, count(*) AS c
-    FROM (SELECT doc_id, unnest(t) AS tok FROM nz) GROUP BY doc_id, tok)
+    FROM (SELECT doc_id, unnest(ts) AS tok FROM nz) GROUP BY doc_id, tok)
   GROUP BY doc_id),
 bi AS (
-  SELECT doc_id, len(t) - 1 AS n_bi,
-    len(list_distinct(list_transform(generate_series(1, len(t) - 1),
-                                     i -> t[i] || ' ' || t[i+1]))) AS d_bi
+  SELECT doc_id, len(ts) - 1 AS n_bi, len(list_distinct({_BIGRAMS})) AS d_bi
   FROM nz)
 SELECT f.doc_id, CAST(total AS BIGINT) AS n_tokens,
   cast(top AS DOUBLE) / total AS top_token_share,
@@ -1520,10 +1524,10 @@ FROM laid""",
     ),
     "source_blocklist_filter": QuerySpec(
         _t(P.source_blocklist_filter),
-        """WITH bad AS (
+        f"""WITH bad AS (
   SELECT source AS bad_source
   FROM documents GROUP BY source
-  HAVING cast(sum(cast(n_chars AS DECIMAL(25,6))) AS DOUBLE) / count(*) < 290.0)
+  HAVING {_dsum('n_chars')} / count(*) < 290.0)
 SELECT lang, count(*) AS n_docs
 FROM documents
 WHERE source NOT IN (SELECT bad_source FROM bad)
@@ -1944,7 +1948,7 @@ REGISTRY["tpch_q11_important_values"] = QuerySpec(
   WHERE s_nationkey IN (0, 1)
   GROUP BY l_partkey),
 total AS (
-  SELECT cast(sum(cast(part_value AS DECIMAL(25,6))) AS DOUBLE) AS total_value
+  SELECT {_dsum('part_value')} AS total_value
   FROM vals)
 SELECT l_partkey, part_value FROM vals, total
 WHERE part_value > total_value * 0.001
@@ -2008,8 +2012,7 @@ REGISTRY["tpch_q20_excess_shippers"] = QuerySpec(
     AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
   GROUP BY l_suppkey),
 avg_qty AS (
-  SELECT cast(sum(cast(red_qty AS DECIMAL(25,6))) AS DOUBLE) / count(*)
-    AS avg_qty
+  SELECT {_dsum('red_qty')} / count(*) AS avg_qty
   FROM shipped)
 SELECT s_suppkey, s_name FROM supplier
 WHERE s_suppkey IN (SELECT l_suppkey FROM shipped, avg_qty
@@ -2042,12 +2045,6 @@ ORDER BY numwait DESC, s_name LIMIT 25""",
 # --------------------------------------------------------------------------
 # Corpus vocabulary / TF-IDF + full-outer reconciliation
 # --------------------------------------------------------------------------
-
-_TOKEN_CTE = r"""toks AS (
-  SELECT doc_id,
-    unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                       x -> x != '')) AS token
-  FROM documents)"""
 
 REGISTRY["vocab_top_tokens"] = QuerySpec(
     _t(X.vocab_top_tokens),
@@ -2515,17 +2512,12 @@ REGISTRY["props_extract_variant"] = QuerySpec(
 )
 
 
-_TOKEN_LIST_CTE = r"""toks_list AS (
-  SELECT doc_id,
-    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS t
-  FROM documents)"""
-
 REGISTRY["token_spans_udtf"] = QuerySpec(
     lambda spark, sf_dir: X.token_spans_udtf(spark, load_tables(spark, sf_dir)),
-    f"""WITH {_TOKEN_LIST_CTE}
-SELECT doc_id, cast(i AS INTEGER) AS pos, t[i] AS token,
-  cast(length(t[i]) AS INTEGER) AS token_len
-FROM toks_list, unnest(generate_series(1, len(t))) AS u(i)""",
+    f"""WITH {_TL_CTE}
+SELECT doc_id, cast(i AS INTEGER) AS pos, ts[i] AS token,
+  cast(length(ts[i]) AS INTEGER) AS token_len
+FROM tl, unnest(generate_series(1, len(ts))) AS u(i)""",
     ("text", "udtf"),
 )
 
@@ -2545,11 +2537,10 @@ FROM m""",
 
 REGISTRY["boilerplate_prefix_report"] = QuerySpec(
     _t(X.boilerplate_prefix_report),
-    f"""WITH {_TOKEN_LIST_CTE.replace('FROM documents',
-                                      ', source FROM documents')},
+    f"""WITH {_TL_CTE},
 per AS (
-  SELECT source, array_to_string(t[1:3], ' ') AS prefix, count(*) AS n
-  FROM toks_list GROUP BY source, prefix)
+  SELECT source, array_to_string(ts[1:3], ' ') AS prefix, count(*) AS n
+  FROM tl GROUP BY source, prefix)
 SELECT source, prefix AS top_prefix, n AS n_docs,
   cast(n AS DOUBLE) / sum(n) OVER (PARTITION BY source) AS share
 FROM per
@@ -2654,10 +2645,9 @@ FROM lat""",
 
 REGISTRY["rfm_segment_counts"] = QuerySpec(
     _t(A.rfm_segment_counts),
-    """WITH per_cust AS (
+    f"""WITH per_cust AS (
   SELECT o_custkey, epoch_us(max(o_orderdate)) AS recency_us,
-    count(*) AS frequency,
-    cast(sum(cast(o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS monetary
+    count(*) AS frequency, {_dsum('o_totalprice')} AS monetary
   FROM orders GROUP BY o_custkey),
 q AS (
   SELECT quantile_cont(recency_us, [0.25, 0.5, 0.75]) AS qr,
@@ -3064,7 +3054,7 @@ FROM agg""",
 
 # Zero-filled hourly count grid (shared by the seasonal anomaly and
 # autocorrelation oracles).  NEVER rebind — any oracle string built
-# after a rebinding would silently change (see _TOKS_CTE note).
+# after a rebinding would silently change.
 _HOURLY_FILLED_CTE = """hourly AS (
   SELECT date_trunc('hour', ts) AS h, count(*) AS n
   FROM events GROUP BY h),
@@ -3156,18 +3146,10 @@ FROM scored ORDER BY score DESC, doc_id LIMIT 10""",
 )
 
 
-_BIGRAM_CTE = r"""tl AS (
-  SELECT list_filter(regexp_split_to_array(trim(text), '\s+'),
-                     x -> x != '') AS ts
-  FROM documents),
-bg AS (
-  SELECT unnest(list_transform(generate_series(1, len(ts) - 1),
-                               i -> ts[i] || ' ' || ts[i+1])) AS token
-  FROM tl WHERE len(ts) >= 2)"""
-
 REGISTRY["heavy_hitter_bigrams"] = QuerySpec(
     _t(X.heavy_hitter_bigrams),
-    f"""WITH {_BIGRAM_CTE},
+    f"""WITH {_TL_CTE},
+bg AS (SELECT unnest({_BIGRAMS}) AS token FROM tl WHERE len(ts) >= 2),
 tot AS (SELECT count(*) AS n_total FROM bg),
 cnt AS (SELECT token AS bigram, count(*) AS term_freq FROM bg GROUP BY token)
 SELECT bigram, term_freq, n_total
@@ -3435,17 +3417,8 @@ REGISTRY["quality_linear_score"] = QuerySpec(
     # Hashed-feature linear classifier: integer bucket weights are a
     # pure sha256 function, so the oracle re-derives every logit.
     _t(X.quality_linear_score),
-    rf"""WITH tl AS (
-  SELECT doc_id,
-    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ts
-  FROM documents),
-fl AS (
-  SELECT doc_id,
-    list_concat(
-      ts,
-      list_transform(generate_series(1, len(ts) - 1),
-                     i -> ts[i] || ' ' || ts[i + 1])) AS feats
-  FROM tl),
+    f"""WITH {_TL_CTE},
+fl AS (SELECT doc_id, list_concat(ts, {_BIGRAMS}) AS feats FROM tl),
 scored AS (
   SELECT doc_id,
     cast(len(feats) AS BIGINT) AS n_feats,
@@ -3506,16 +3479,11 @@ FROM hits LEFT JOIN seen ON hits.h = seen.h""",
 )
 
 
-REGISTRY["bigram_surprisal_scores"] = QuerySpec(
-    _t(X.bigram_surprisal_scores),
-    r"""WITH tl AS (
-  SELECT doc_id,
-    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ts
-  FROM documents),
+#: Per-document add-one bigram surprisal (shared by the bigram
+#: surprisal scores and the CCNet perplexity buckets).
+_CCNET_DOC_SURPRISAL = f"""{_TL_CTE},
 pairs AS (
-  SELECT doc_id,
-    unnest(list_transform(generate_series(1, len(ts) - 1),
-                          i -> {'w1': ts[i], 'w2': ts[i+1]})) AS p
+  SELECT doc_id, unnest({_adjacent("{'w1': ts[i], 'w2': ts[i+1]}")}) AS p
   FROM tl WHERE len(ts) >= 2),
 tf AS (SELECT doc_id, p.w1 AS w1, p.w2 AS w2, count(*) AS c
        FROM pairs GROUP BY doc_id, p.w1, p.w2),
@@ -3530,10 +3498,16 @@ scored AS (
   SELECT tf.doc_id, tf.c,
     -cast(floor(ln(cast(c_bigram + 1 AS DOUBLE) / (c_start + v)) * 1e6)
           AS BIGINT) AS s_q
-  FROM tf JOIN bg USING (w1, w2) JOIN starts USING (w1), vocab)
-SELECT doc_id, cast(sum(c) AS BIGINT) AS n_bigrams,
-  cast(sum(c * s_q) AS DOUBLE) / (1e6 * sum(c)) AS avg_surprisal
-FROM scored GROUP BY doc_id""",
+  FROM tf JOIN bg USING (w1, w2) JOIN starts USING (w1), vocab),
+doc AS (
+  SELECT doc_id, cast(sum(c) AS BIGINT) AS n_bigrams,
+    cast(sum(c * s_q) AS DOUBLE) / (1e6 * sum(c)) AS avg_surprisal
+  FROM scored GROUP BY doc_id)"""
+
+REGISTRY["bigram_surprisal_scores"] = QuerySpec(
+    _t(X.bigram_surprisal_scores),
+    f"""WITH {_CCNET_DOC_SURPRISAL}
+SELECT doc_id, n_bigrams, avg_surprisal FROM doc""",
     ("text", "quality", "language-model"),
 )
 
@@ -3550,16 +3524,16 @@ REGISTRY["corpus_dataset_card"] = QuerySpec(
     _t(P.corpus_dataset_card),
     f"""WITH pairs AS (
 {_minhash_oracle()}),
+{_TL_CTE},
 base AS (
   SELECT count(*) AS n_docs,
     count(DISTINCT source) AS n_sources,
     count(DISTINCT lang) AS n_langs,
-    cast(sum(len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
-                             x -> x != ''))) AS BIGINT) AS total_tokens,
+    cast(sum(len(ts)) AS BIGINT) AS total_tokens,
     cast(sum(length(text)) AS BIGINT) AS total_chars,
     cast(min(length(text)) AS BIGINT) AS min_chars,
     cast(max(length(text)) AS BIGINT) AS max_chars
-  FROM documents),
+  FROM tl),
 dup AS (
   SELECT count(*) - count(DISTINCT sha256(text)) AS n_exact_dup_docs
   FROM documents),
@@ -3577,10 +3551,7 @@ FROM base, dup, nd, ic""",
 
 REGISTRY["doc_chunk_windows"] = QuerySpec(
     _t(X.doc_chunk_windows),
-    rf"""WITH tl AS (
-  SELECT doc_id,
-    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ts
-  FROM documents),
+    f"""WITH {_TL_CTE},
 sized AS (
   SELECT doc_id, ts, len(ts) AS n,
     CASE WHEN len(ts) = 0 THEN 0
@@ -3749,14 +3720,10 @@ FROM deciled, tot GROUP BY decile, total_rev""",
 
 REGISTRY["label_top_terms"] = QuerySpec(
     _t(X.label_top_terms),
-    rf"""WITH lab AS (
-  SELECT d.doc_id, e.label, d.text
-  FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id),
+    f"""WITH {_TL_CTE},
 toks AS (
-  SELECT label,
-    unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                       x -> x != '')) AS token
-  FROM lab),
+  SELECT e.label, unnest(ts) AS token
+  FROM tl JOIN embeddings e ON tl.doc_id = e.vec_id),
 lab_tf AS (SELECT label, token, count(*) AS tf FROM toks GROUP BY label, token),
 lab_n AS (SELECT label, cast(sum(tf) AS BIGINT) AS n_label
           FROM lab_tf GROUP BY label),
@@ -3948,11 +3915,8 @@ FROM cells JOIN mx USING (event_type) JOIN my USING (dow), tot""",
 
 REGISTRY["source_token_entropy"] = QuerySpec(
     _t(X.source_token_entropy),
-    rf"""WITH toks AS (
-  SELECT source,
-    unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                       x -> x != '')) AS token
-  FROM documents),
+    f"""WITH {_TL_CTE},
+toks AS (SELECT source, unnest(ts) AS token FROM tl),
 tf AS (SELECT source, token, count(*) AS n_t FROM toks GROUP BY source, token),
 per AS (
   SELECT source, token, n_t,
@@ -3978,17 +3942,11 @@ FROM agg""",
 
 REGISTRY["vocab_growth_curve"] = QuerySpec(
     _t(X.vocab_growth_curve),
-    rf"""WITH toks AS (
-  SELECT doc_id,
-    unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                       x -> x != '')) AS token
-  FROM documents),
+    f"""WITH {_TOKEN_CTE},
 first_seen AS (SELECT token, min(doc_id) AS first_doc FROM toks GROUP BY token),
 deciled AS (
-  SELECT doc_id, ntile(10) OVER (ORDER BY doc_id) AS decile,
-    len(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != ''))
-      AS n_toks
-  FROM documents),
+  SELECT doc_id, ntile(10) OVER (ORDER BY doc_id) AS decile, len(ts) AS n_toks
+  FROM tl),
 bounds AS (
   SELECT decile, max(doc_id) AS max_doc, count(*) AS n_docs,
     cast(sum(n_toks) AS BIGINT) AS decile_tokens
@@ -4050,15 +4008,14 @@ REGISTRY["tpch_q6_shared_sql"].oracle = REGISTRY["tpch_q6_forecast_revenue"].ora
 
 REGISTRY["tokenizer_fertility_by_lang"] = QuerySpec(
     _t(X.tokenizer_fertility_by_lang),
-    r"""WITH per_doc AS (
-  SELECT lang, length(text) AS n_chars,
-    len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                    x -> x != '')) AS n_words,
+    rf"""WITH {_TL_CTE},
+per_doc AS (
+  SELECT lang, length(text) AS n_chars, len(ts) AS n_words,
     len(list_filter(
       regexp_extract_all(text,
         '''(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+|\s+'),
       x -> NOT regexp_matches(x, '^\s+$'))) AS n_bpe
-  FROM documents)
+  FROM tl)
 SELECT lang, count(*) AS n_docs,
   cast(sum(n_chars) AS BIGINT) AS total_chars,
   cast(sum(n_words) AS BIGINT) AS total_words,
@@ -4197,12 +4154,12 @@ SELECT source, sample_rank, doc_id FROM ranked WHERE sample_rank <= 10""",
 
 REGISTRY["gopher_quality_flags"] = QuerySpec(
     _t(X.gopher_quality_flags),
-    r"""WITH d AS (
-  SELECT source,
-    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ts,
+    f"""WITH {_TL_CTE},
+d AS (
+  SELECT source, ts,
     length(text) - length(replace(text, '#', '')) AS hash_chars,
     (length(text) - length(replace(text, '...', ''))) // 3 AS ell
-  FROM documents),
+  FROM tl),
 per_doc AS (
   SELECT source, len(ts) AS n,
     coalesce(list_sum(list_transform(ts, x -> length(x))), 0) AS sum_len,
@@ -4233,34 +4190,6 @@ FROM flags GROUP BY source""",
     ("text", "quality", "curation", "gopher"),
 )
 
-_CCNET_DOC_SURPRISAL = r"""tl AS (
-  SELECT doc_id,
-    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ts
-  FROM documents),
-pairs AS (
-  SELECT doc_id,
-    unnest(list_transform(generate_series(1, len(ts) - 1),
-                          i -> {'w1': ts[i], 'w2': ts[i+1]})) AS p
-  FROM tl WHERE len(ts) >= 2),
-tf AS (SELECT doc_id, p.w1 AS w1, p.w2 AS w2, count(*) AS c
-       FROM pairs GROUP BY doc_id, p.w1, p.w2),
-bg AS (SELECT w1, w2, cast(sum(c) AS BIGINT) AS c_bigram
-       FROM tf GROUP BY w1, w2),
-starts AS (SELECT w1, cast(sum(c_bigram) AS BIGINT) AS c_start
-           FROM bg GROUP BY w1),
-vocab AS (
-  SELECT count(DISTINCT token) AS v FROM (
-    SELECT unnest(ts) AS token FROM tl)),
-scored AS (
-  SELECT tf.doc_id, tf.c,
-    -cast(floor(ln(cast(c_bigram + 1 AS DOUBLE) / (c_start + v)) * 1e6)
-          AS BIGINT) AS s_q
-  FROM tf JOIN bg USING (w1, w2) JOIN starts USING (w1), vocab),
-doc AS (
-  SELECT doc_id,
-    cast(sum(c * s_q) AS DOUBLE) / (1e6 * sum(c)) AS avg_surprisal
-  FROM scored GROUP BY doc_id)"""
-
 REGISTRY["ccnet_perplexity_buckets"] = QuerySpec(
     _t(X.ccnet_perplexity_buckets),
     f"""WITH {_CCNET_DOC_SURPRISAL},
@@ -4287,18 +4216,11 @@ FROM sd JOIN cuts USING (lang)""",
     ("text", "quality", "language-model", "ccnet", "histogram-quantile"),
 )
 
-_TOKENS_CTE = r"""tl AS (
-  SELECT doc_id, lang, source,
-    list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ts
-  FROM documents)"""
-
 REGISTRY["dsir_importance_weights"] = QuerySpec(
     _t(X.dsir_importance_weights),
-    f"""WITH {_TOKENS_CTE},
+    f"""WITH {_TL_CTE},
 bigrams AS (
-  SELECT doc_id, lang,
-    unnest(list_transform(generate_series(1, len(ts) - 1),
-                          i -> ts[i] || ' ' || ts[i+1])) AS bigram
+  SELECT doc_id, lang, unnest({_BIGRAMS}) AS bigram
   FROM tl WHERE len(ts) >= 2),
 dc AS (
   SELECT doc_id,
@@ -4326,11 +4248,8 @@ GROUP BY doc_id""",
 
 REGISTRY["zipf_slope_fit"] = QuerySpec(
     _t(X.zipf_slope_fit),
-    r"""WITH tok AS (
-  SELECT unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                            x -> x != '')) AS token
-  FROM documents),
-counts AS (SELECT token, count(*) AS freq FROM tok GROUP BY token),
+    f"""WITH {_TOKEN_CTE},
+counts AS (SELECT token, count(*) AS freq FROM toks GROUP BY token),
 ranked AS (
   SELECT freq, row_number() OVER (ORDER BY freq DESC, token ASC) AS rank
   FROM counts QUALIFY rank <= 100),
@@ -4365,11 +4284,8 @@ FROM sums""",
 
 REGISTRY["bpe_first_merges"] = QuerySpec(
     _t(X.bpe_first_merges),
-    r"""WITH tok AS (
-  SELECT unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                            x -> x != '')) AS word
-  FROM documents),
-words AS (SELECT word, count(*) AS wc FROM tok GROUP BY word),
+    f"""WITH {_TOKEN_CTE},
+words AS (SELECT token AS word, count(*) AS wc FROM toks GROUP BY token),
 pairs AS (
   SELECT wc, unnest(list_transform(generate_series(1, length(word) - 1),
                                    i -> substr(word, i, 2))) AS pair
@@ -4385,7 +4301,7 @@ SELECT pair, n, rank FROM ranked WHERE rank <= 20""",
 
 REGISTRY["token_budget_waterfill"] = QuerySpec(
     _t(P.token_budget_waterfill),
-    f"""WITH {_TOKENS_CTE},
+    f"""WITH {_TL_CTE},
 counts AS (
   SELECT source, cast(sum(len(ts)) AS BIGINT) AS n_tokens
   FROM tl GROUP BY source),
@@ -4438,12 +4354,10 @@ FROM alloc""",
 
 REGISTRY["source_divergence_matrix"] = QuerySpec(
     _t(X.source_divergence_matrix),
-    r"""WITH tl AS (
-  SELECT source,
-    unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                       x -> x != '')) AS token
-  FROM documents),
-tc AS (SELECT source, token, count(*) AS n FROM tl GROUP BY 1, 2),
+    f"""WITH {_TL_CTE},
+tc AS (
+  SELECT source, token, count(*) AS n
+  FROM (SELECT source, unnest(ts) AS token FROM tl) GROUP BY 1, 2),
 totals AS (
   SELECT source, cast(sum(n) AS BIGINT) AS n_tok, count(*) AS v_src
   FROM tc GROUP BY source),
@@ -4546,12 +4460,12 @@ REGISTRY["quality_gate_agreement"] = QuerySpec(
     _t(X.quality_gate_agreement),
     f"""WITH cc AS ({REGISTRY["ccnet_perplexity_buckets"].oracle}),
 qs AS ({REGISTRY["quality_linear_score"].oracle}),
+{_TL_CTE},
 gdoc AS (
-  SELECT doc_id,
-    list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '') AS ts,
+  SELECT doc_id, ts,
     length(text) - length(replace(text, '#', '')) AS hash_chars,
     (length(text) - length(replace(text, '...', ''))) // 3 AS ell
-  FROM documents),
+  FROM tl),
 gperdoc AS (
   SELECT doc_id, len(ts) AS n,
     coalesce(list_sum(list_transform(ts, x -> length(x))), 0) AS sum_len,
@@ -4654,12 +4568,10 @@ FROM terms GROUP BY label_a, label_b""",
 
 REGISTRY["context_fill_efficiency"] = QuerySpec(
     _t(P.context_fill_efficiency),
-    r"""WITH lens AS (
+    f"""WITH lens AS (
   SELECT * FROM (VALUES (512), (2048), (8192)) AS l(context_len)),
-ntok AS (
-  SELECT cast(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                              x -> x != '')) AS BIGINT) AS n_tok
-  FROM documents),
+{_TL_CTE},
+ntok AS (SELECT cast(len(ts) AS BIGINT) AS n_tok FROM tl),
 graded AS (
   SELECT context_len, n_tok,
     cast(floor((n_tok + context_len - 1) / context_len) AS BIGINT) AS chunks,

@@ -43,14 +43,23 @@ def read_spc_csv(spark: SparkSession, path: str, event_type: str) -> DataFrame:
 
 def read_json_records(spark: SparkSession, path: str) -> DataFrame:
     """S7 — whole-file JSON array of raw records
-    (reference cmd/validate/main.go:205-215 'loadJSON')."""
+    (reference cmd/validate/main.go:205-215 'loadJSON').  Each file
+    under ``path`` is one JSON value; a top-level array yields one row
+    per element."""
     return spark.read.option("multiLine", True).schema(RAW_CSV_SCHEMA).json(path)
 
 
 def write_json_fixture(df: DataFrame, path: str) -> None:
     """S8 — JSON fixture sink (reference cmd/genmock/main.go:182-192;
-    indentation there is cosmetic — the contract is the records)."""
-    df.write.mode("overwrite").json(path)
+    indentation there is cosmetic — the contract is the records).
+
+    Writes ONE file holding one whole-file JSON array, the shape
+    ``read_json_records`` reads back, whatever the partitioning of
+    ``df``.  (Spark's JSON Lines writer puts one record per line, and
+    a multi-line reader keeps only the first value of each file.)  The
+    array is built in one task, which is fine at fixture size."""
+    array = F.to_json(F.collect_list(F.struct(*df.columns)))
+    df.select(array.alias("value")).write.mode("overwrite").text(path)
 
 
 def write_partitioned_parquet(

@@ -34,6 +34,7 @@ from __future__ import annotations
 import threading
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -262,8 +263,10 @@ def retry_with_backoff(
 
     Spark already retries *tasks* (``spark.task.maxFailures``); this
     wraps driver-side sink calls in ``foreachBatch`` where the
-    reference's extract/load retry loop lives.  Returns a wrapped
-    callable with the same signature."""
+    reference's extract/load retry loop lives.  An ``AnalysisException``
+    (unresolved column, missing path, schema mismatch) fails the same
+    way on every attempt, so it is re-raised at once, not retried.
+    Returns a wrapped callable with the same signature."""
     import time as _time
 
     do_sleep = sleep or _time.sleep
@@ -273,6 +276,8 @@ def retry_with_backoff(
         for attempt in range(max_attempts):
             try:
                 return fn(*args, **kwargs)
+            except AnalysisException:
+                raise
             except Exception:
                 if attempt == max_attempts - 1:
                     raise
@@ -292,7 +297,11 @@ def stop_gracefully(query, timeout_ms: int = 10_000) -> bool:
 
 
 def parquet_sink(out_dir: str):
-    """Simple exactly-once-per-batch parquet sink for tests/batch jobs."""
+    """Simple append-only parquet sink for tests/batch jobs.
+
+    At-least-once: nothing guards on ``batch_id``, so a batch replayed
+    after a failure between this write and the offset commit appends
+    its rows a second time."""
 
     def write(df: DataFrame, batch_id: int) -> None:
         flatten(df).write.mode("append").parquet(out_dir)

@@ -58,11 +58,13 @@ def test_read_spc_csv_enriches_to_golden(spark, workdir):
     assert raw["F_Scale"] == "" and raw["Speed"] == ""
 
 
-def test_json_roundtrip(spark, workdir):
-    """S7/S8 — fixture sink then whole-file JSON scan round-trips."""
+@pytest.mark.parametrize("n_partitions", [1, 8])
+def test_json_roundtrip(spark, workdir, n_partitions):
+    """S7/S8 — fixture sink then whole-file JSON scan round-trips, for
+    one input partition and for several rows per partition file."""
     from storm_data_etl_service_spark.sources.storm_fixture import spark_fixture_df
 
-    raw = spark_fixture_df(spark).drop("kafka_timestamp")
+    raw = spark_fixture_df(spark).drop("kafka_timestamp").repartition(n_partitions)
     out = workdir / "fixture"
     write_json_fixture(raw, str(out))
     back = read_json_records(spark, str(out))

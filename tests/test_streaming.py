@@ -267,6 +267,20 @@ def test_retry_with_backoff_delays_and_recovers():
     # doubling caps at 5s
     assert sleeps == [0.2, 0.4, 0.8, 1.6, 3.2, 5.0]
 
+    # an analysis error cannot succeed on retry: one call, no sleeps
+    from pyspark.errors import AnalysisException
+
+    calls = []
+
+    def unresolved():
+        calls.append(1)
+        raise AnalysisException("cannot resolve column")
+
+    sleeps.clear()
+    with pytest.raises(AnalysisException, match="cannot resolve"):
+        retry_with_backoff(unresolved, sleep=sleeps.append)()
+    assert sleeps == [] and calls == [1]
+
 
 def test_graceful_shutdown_drains(spark, workdir):
     """D7 — stop() returns after the in-flight batch drains."""

@@ -2287,3 +2287,40 @@ def test_codegen_tokenizer_equals_hof_form(spark):
         for n in (1, 2, 3):
             want = n_tok >= n if r["new"] is not None else None
             assert r[f"p{n}"] == want, (case, n, r[f"p{n}"], want)
+
+
+def test_duckdb_tokenizer_equals_tokens_col(spark):
+    """The oracle's tokenizer fragment (registry._TOKENIZE, plain
+    DuckDB SQL) and the Spark tokenizer (text.tokens_col) must emit the
+    same token list for every whitespace edge case: every text oracle
+    inherits this agreement."""
+    import duckdb
+
+    from storm_data_etl_service_spark.operators.registry import _TOKENIZE
+    from storm_data_etl_service_spark.operators.text import tokens_col
+
+    cases = [
+        "",
+        "   ",
+        "\t\n\r",
+        "\tleading tab",
+        "\nleading newline",
+        "trailing tab\t",
+        "trailing newline\n",
+        "\t\n both ends \n\t",
+        "runs  of\t\tmixed \n\r\n whitespace",
+        "single",
+        " single ",
+        "\tsingle\n",
+        None,
+    ]
+    spark_rows = (
+        spark.createDataFrame([(i, c) for i, c in enumerate(cases)], "i int, text string")
+        .select("i", tokens_col(F.col("text")).alias("ts"))
+        .orderBy("i")
+        .collect()
+    )
+    con = duckdb.connect()
+    for case, srow in zip(cases, spark_rows):
+        dts = con.execute(f"SELECT {_TOKENIZE} FROM (SELECT ?::VARCHAR AS text)", [case]).fetchone()[0]
+        assert srow["ts"] == dts, (case, srow["ts"], dts)
