@@ -6,9 +6,11 @@ r5→r6: 24 queries flagged on byte-identical untouched code), so
 round-over-round diffs taken across sessions can neither confirm nor
 rule out code regressions.  This harness retires that caveat BY
 CONSTRUCTION: each arm is a git worktree (or the live tree), and arms
-run INTERLEAVED in one session — arm1, arm2, ..., armN, then the next
-round — so any host drift lands on every arm equally and the per-query
-paired ratio isolates the code delta.
+run INTERLEAVED in one session — arm1, ..., armN, then the next round
+in reverse order, armN, ..., arm1 (ABBA) — so host drift lands on every
+arm equally, a monotone drift favours no arm's position, and the
+per-query paired ratio isolates the code delta.  The schedule records
+each run's round and position.
 
 Per invocation each arm's own ``bench.py`` already takes best-of-3 per
 query (after an sf0.001 codegen warmup); this harness repeats the
@@ -104,11 +106,15 @@ def main() -> None:
     schedule = []
     t_session0 = time.time()
     for rnd in range(args.rounds):
-        for name, path in arms.items():
+        # ABBA: odd rounds run the arms in reverse, so a drift that is
+        # monotone over the session does not always favour the same arm
+        order = list(arms) if rnd % 2 == 0 else list(arms)[::-1]
+        for position, name in enumerate(order):
+            path = arms[name]
             t0 = time.time()
             spread = run_arm(path, queries, args.sf_dir,
                              f"/tmp/bench_ab_{name}_{rnd}.json")
-            schedule.append({"round": rnd, "arm": name,
+            schedule.append({"round": rnd, "position": position, "arm": name,
                              "t_start_s": round(t0 - t_session0, 1),
                              "wall_s": round(time.time() - t0, 1)})
             for q in queries:
@@ -147,6 +153,7 @@ def main() -> None:
     doc = {
         "protocol": {
             "design": "interleaved same-session paired arms",
+            "arm_order": "ABBA: declaration order on even rounds, reversed on odd rounds",
             "rounds": args.rounds,
             "statistic": "per-arm min over rounds AND median of per-round best-of-3 minima; regression requires both ratios > threshold",
             "threshold": THRESHOLD,

@@ -20,12 +20,11 @@ def enrichment_metric_exprs() -> list:
     """The D9 counter set as aggregate expressions over the ENRICHED
     frame: records seen, records with unknown type (the poison-pill /
     quality signal), records carrying a derived severity, max
-    magnitude seen (capacity envelope)."""
+    magnitude seen (capacity envelope).  The counts are 0, not null,
+    over an empty frame."""
     return [
         F.count(F.lit(1)).alias("n_records"),
-        F.sum(F.when(F.col("event_type") == "", 1).otherwise(0)).alias(
-            "n_unknown_type"
-        ),
+        F.count_if(F.col("event_type") == "").alias("n_unknown_type"),
         F.count("measurement.severity").alias("n_with_severity"),
         F.max("measurement.magnitude").alias("max_magnitude"),
     ]

@@ -6,7 +6,8 @@ internal/adapter/httpadapter/server.go, README.md endpoints table):
 * ``GET /healthz`` — liveness, always 200;
 * ``GET /readyz``  — 200 after the first processed batch, else 503;
 * ``GET /metrics`` — Prometheus text exposition of the pipeline
-  counters (reference internal/observability/metrics.go:20-66).
+  counters (reference internal/observability/metrics.go:20-66) and
+  the enrichment quality counters.
 
 Runs in a daemon thread next to the Spark driver — the driver is the
 single coordinating process, exactly where the reference hosts it.
@@ -21,7 +22,8 @@ from storm_data_etl_service_spark.streaming.pipeline import PipelineMetrics
 
 
 def render_metrics(m: PipelineMetrics) -> str:
-    """Prometheus text format, same metric names as the reference."""
+    """Prometheus text format, same metric names as the reference, plus
+    the enrichment quality counters over produced events."""
     lines = [
         "# TYPE storm_etl_messages_consumed_total counter",
         f"storm_etl_messages_consumed_total {m.consumed}",
@@ -29,6 +31,10 @@ def render_metrics(m: PipelineMetrics) -> str:
         f"storm_etl_messages_produced_total {m.produced}",
         "# TYPE storm_etl_transform_errors_total counter",
         f"storm_etl_transform_errors_total {m.transform_errors}",
+        "# TYPE storm_etl_events_unknown_type_total counter",
+        f"storm_etl_events_unknown_type_total {m.unknown_type}",
+        "# TYPE storm_etl_events_with_severity_total counter",
+        f"storm_etl_events_with_severity_total {m.with_severity}",
         "# TYPE storm_etl_batches_total counter",
         f"storm_etl_batches_total {m.batches}",
         "# TYPE storm_etl_running gauge",

@@ -7,26 +7,31 @@ Semantics mapping:
 * D1 micro-batch driver    → the Structured Streaming engine itself
   (trigger interval ≙ BATCH_FLUSH_INTERVAL, maxOffsetsPerTrigger ≙
   BATCH_SIZE);
-* D2 poison-pill routing   → corrupt-record split in ``foreachBatch``:
-  malformed records are counted and written to a dead-letter sink,
-  the batch continues, and the checkpoint advances past them —
-  exactly the reference's warn-log + skip + commit policy
-  (reference docs/Architecture.md:110-114);
+* D2 poison-pill routing   → the stream plan flags malformed records
+  (``is_poison``); ``foreachBatch`` counts them with an ``observe`` on
+  the sink write, drops them from the sink, and writes them to a
+  dead-letter sink only when the count is non-zero.  The batch
+  continues and the checkpoint advances past them — exactly the
+  reference's warn-log + skip + commit policy (reference
+  docs/Architecture.md:110-114);
 * D3 commit-after-load     → checkpoint WAL/commit-log ordering: the
-  offset range is committed only after the batch's sink write
-  returns, giving the same at-least-once contract;
+  sink write runs first, then the dead-letter write, and the offset
+  range is committed only after both return.  A failure in either
+  replays the whole batch, so both writes are at-least-once;
 * D8 idempotent replay     → deterministic IDs (P5) + first-wins
   dedup by (id, arrival order) inside each batch; cross-batch
   replays are absorbed downstream by the deterministic IDs, the
   reference's own design (docs/Architecture.md:99-102);
 * D6 readiness / D9 metrics→ foreachBatch-updated counters
-  (consumed/produced/errors) with a readiness latch that flips after
-  the first successful batch;
+  (consumed/produced/errors plus the enrichment quality counters)
+  with a readiness latch that flips after the first successful batch;
 * D7 graceful shutdown     → ``stop()`` on the query handle drains
   the in-flight batch before returning.
 
-The enrichment applied per batch is the *same* expression-only
-``enrich()`` used in batch mode — nothing is reimplemented.
+The enrichment is the *same* expression-only ``enrich()`` used in
+batch mode — nothing is reimplemented.  It is declared once, on the
+stream, so the engine analyses it once per query; ``foreachBatch``
+holds only the per-batch parts: the window dedup and the two writers.
 """
 
 from __future__ import annotations
@@ -44,6 +49,7 @@ from storm_data_etl_service_spark.functions.enrich import (
     flatten,
     parse_raw_events,
 )
+from storm_data_etl_service_spark.observability import enrichment_metric_exprs
 from storm_data_etl_service_spark.schemas import RAW_EVENT_SCHEMA
 
 
@@ -75,31 +81,38 @@ def file_source(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.schema(RAW_EVENT_SCHEMA).json(path)
 
 
-def split_poison(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """D2 — parse the envelope payload and fork valid / dead-letter."""
-    return split_parsed(parse_raw_events(raw))
+#: Envelope columns of a dead-letter row (reference docs/Architecture.md:110-114).
+DLQ_COLUMNS = ("raw_value", "topic", "partition", "offset", "timestamp")
 
 
-def split_parsed(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Fork an already-parsed envelope frame into valid / dead-letter
-    (factored out so ``_process_batch`` can persist the parse once and
-    derive both forks from the cache — single parse per micro-batch)."""
-    poison = parsed.filter(F.col("is_poison")).select(
-        F.col("value").cast("string").alias("raw_value"),
-        "topic",
-        "partition",
-        "offset",
-        "timestamp",
-    )
-    valid = (
-        parsed.filter(~F.col("is_poison"))
+def parse_envelope(raw: DataFrame) -> DataFrame:
+    """S4/D2 — parse the envelope payload into flat columns: the
+    ``RAW_CSV_SCHEMA`` fields, ``kafka_timestamp``/``kafka_offset``
+    (HHMM base date and arrival order), ``is_poison``, and the
+    ``DLQ_COLUMNS`` a dead-letter row keeps.  Stateless, so it serves
+    batch and streaming alike."""
+    return (
+        parse_raw_events(raw)
         .select(
             "parsed.*",
             F.col("timestamp").alias("kafka_timestamp"),
             F.col("offset").alias("kafka_offset"),
+            "is_poison",
+            F.col("value").cast("string").alias("raw_value"),
+            "topic",
+            "partition",
+            "offset",
+            "timestamp",
         )
         .drop("_corrupt_record")
     )
+
+
+def split_poison(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """D2 — parse the envelope payload and fork valid / dead-letter."""
+    flat = parse_envelope(raw)
+    poison = flat.filter(F.col("is_poison")).select(*DLQ_COLUMNS)
+    valid = flat.filter(~F.col("is_poison")).drop("is_poison", *DLQ_COLUMNS)
     return valid, poison
 
 
@@ -156,25 +169,42 @@ def kafka_sink_frame(enriched: DataFrame) -> DataFrame:
 class PipelineMetrics:
     """D6/D9 — consumed/produced/error counters + readiness latch
     (reference internal/observability/metrics.go:20-66,
-    pipeline.go:37-60).  Updated from ``foreachBatch`` after each
-    batch's sink write returns, so ``ready`` flips exactly when the
-    reference's atomic readiness bool does: after the first
-    successfully processed batch (reference pipeline.go:116)."""
+    pipeline.go:37-60), plus the enrichment quality counters of
+    ``observability.enrichment_metric_exprs`` over produced records.
+    Updated from ``foreachBatch`` after each batch's writes return, so
+    ``ready`` flips exactly when the reference's atomic readiness bool
+    does: after the first successfully processed batch (reference
+    pipeline.go:116)."""
 
     consumed: int = 0
     produced: int = 0
     transform_errors: int = 0
+    unknown_type: int = 0
+    with_severity: int = 0
     batches: int = 0
     ready: bool = False
     _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
 
-    def record_batch(self, consumed: int, produced: int, errors: int) -> None:
+    def record_batch(
+        self,
+        consumed: int,
+        produced: int,
+        errors: int,
+        unknown_type: int = 0,
+        with_severity: int = 0,
+    ) -> None:
         with self._lock:
             self.consumed += consumed
             self.produced += produced
             self.transform_errors += errors
+            self.unknown_type += unknown_type
+            self.with_severity += with_severity
             self.batches += 1
             self.ready = True
+
+
+#: Columns the stream plan carries past ``enrich`` for ``foreachBatch``.
+_PASSTHROUGH = ("kafka_offset", "is_poison", *DLQ_COLUMNS)
 
 
 class StormStreamPipeline:
@@ -185,7 +215,12 @@ class StormStreamPipeline:
     injected (parquet dir, Kafka frame, memory table...) mirroring the
     reference's consumer-defined Extractor/Loader interfaces
     (reference internal/pipeline/pipeline.go:16-28) that made its
-    pipeline unit-testable.
+    pipeline unit-testable.  ``sink_writer`` must run an action over
+    the frame it is given: the batch's counts are read from that action.
+
+    ``processed_at`` defaults to ``current_timestamp()``, which the
+    engine fixes once per micro-batch: every record of a batch carries
+    that batch's timestamp.
     """
 
     def __init__(
@@ -203,33 +238,37 @@ class StormStreamPipeline:
         self.processed_at = processed_at
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Single-pass micro-batch kernel: the raw envelope is parsed
-        ONCE into a persisted frame (poison count + DLQ write are cache
-        scans, not re-parses), and the produced count piggybacks on the
-        sink write itself via ``DataFrame.observe`` — exactly one
-        enrich+dedup execution per batch, no standalone ``.count()``
-        actions recomputing the plan (the reference counts in-process
-        for free, internal/pipeline/pipeline.go:104-153)."""
+        """Micro-batch kernel over the already-enriched batch: the sink
+        write's jobs, plus one dead-letter job only when the batch has
+        poison.
+
+        Both counts ride the sink write as ``observe`` nodes, so no
+        action runs besides the writers (the reference counts
+        in-process for free, internal/pipeline/pipeline.go:104-153):
+        the first counts poison rows on the incoming frame, the second
+        counts produced rows and the enrichment quality counters after
+        the dedup.  The dead-letter write follows the sink write; it
+        re-reads the batch and keeps its poison rows."""
         from pyspark.sql import Observation
 
-        parsed = parse_raw_events(batch_df).persist()
-        try:
-            valid, poison = split_parsed(parsed)
-            n_poison = poison.count()  # cache scan — parse ran once above
-            if n_poison and self.dlq_writer is not None:
-                self.dlq_writer(poison, batch_id)
-            enriched = enrich(
-                valid, processed_at=self.processed_at, passthrough=("kafka_offset",)
-            )
-            deduped = dedup_first_wins(enriched).drop("kafka_offset")
-            obs = Observation(f"sink_batch_{batch_id}")
-            observed = deduped.observe(obs, F.count(F.lit(1)).alias("n_out"))
-            self.sink_writer(observed, batch_id)
-            n_out = obs.get["n_out"]
-        finally:
-            parsed.unpersist()
+        is_poison = F.col("is_poison")
+        poison_obs = Observation(f"poison_batch_{batch_id}")
+        sink_obs = Observation(f"sink_batch_{batch_id}")
+        valid = batch_df.observe(
+            poison_obs, F.count_if(is_poison).alias("n_poison")
+        ).filter(~is_poison)
+        deduped = dedup_first_wins(valid).drop(*_PASSTHROUGH)
+        self.sink_writer(deduped.observe(sink_obs, *enrichment_metric_exprs()), batch_id)
+        n_poison = poison_obs.get["n_poison"]
+        if n_poison and self.dlq_writer is not None:
+            self.dlq_writer(batch_df.filter(is_poison).select(*DLQ_COLUMNS), batch_id)
+        out = sink_obs.get
         self.metrics.record_batch(
-            consumed=n_out + n_poison, produced=n_out, errors=n_poison
+            consumed=out["n_records"] + n_poison,
+            produced=out["n_records"],
+            errors=n_poison,
+            unknown_type=out["n_unknown_type"],
+            with_severity=out["n_with_severity"],
         )
 
     def start(
@@ -238,12 +277,19 @@ class StormStreamPipeline:
         trigger: dict | None = None,
         query_name: str = "storm_etl",
     ):
-        """Run the stream; D3 at-least-once comes from the checkpoint:
-        offsets WAL'd before the batch, committed after the sink write
-        (our ``foreachBatch`` raises on sink failure, so the offset
-        range is retried — never skipped)."""
+        """Run the stream.  Parse and enrichment are declared here, once,
+        on the stream; ``foreachBatch`` receives enriched rows.  D3
+        at-least-once comes from the checkpoint: offsets WAL'd before
+        the batch, committed after the writes (our ``foreachBatch``
+        raises on a writer failure, so the offset range is retried —
+        never skipped)."""
+        enriched = enrich(
+            parse_envelope(self.raw_stream),
+            processed_at=self.processed_at,
+            passthrough=_PASSTHROUGH,
+        )
         writer = (
-            self.raw_stream.writeStream.queryName(query_name)
+            enriched.writeStream.queryName(query_name)
             .option("checkpointLocation", checkpoint_dir)
             .foreachBatch(self._process_batch)
         )

@@ -67,6 +67,16 @@ def test_render_metrics_names():
         assert name in text
 
 
+def test_render_metrics_enrichment_counters():
+    m = PipelineMetrics()
+    m.record_batch(consumed=5, produced=4, errors=1, unknown_type=1, with_severity=3)
+    m.record_batch(consumed=2, produced=2, errors=0, unknown_type=0, with_severity=2)
+    lines = render_metrics(m).splitlines()
+    assert "storm_etl_events_unknown_type_total 1" in lines
+    assert "storm_etl_events_with_severity_total 5" in lines
+    assert "storm_etl_messages_consumed_total 7" in lines
+
+
 def test_file_service_pipeline_end_to_end(spark, workdir):
     """build_pipeline with file source/sink processes records and
     reports through the same metrics the endpoints expose."""
@@ -76,6 +86,8 @@ def test_file_service_pipeline_end_to_end(spark, workdir):
         RAW_ROWS,
     )
     import base64
+
+    from pyspark.sql import functions as F
 
     src = workdir / "src"
     src.mkdir()
@@ -108,6 +120,11 @@ def test_file_service_pipeline_end_to_end(spark, workdir):
     out = spark.read.parquet(str(workdir / "out"))
     assert out.count() == 8
     assert "id" in out.columns
+    # the quality counters ride the sink write: they describe its rows
+    assert pipe.metrics.unknown_type == out.filter(F.col("event_type") == "").count()
+    assert pipe.metrics.with_severity == out.filter(
+        F.col("measurement_severity").isNotNull()
+    ).count()
 
 
 def test_observe_metrics_piggyback_on_single_pass(spark):

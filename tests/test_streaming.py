@@ -13,6 +13,7 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from storm_data_etl_service_spark.schemas import RAW_EVENT_SCHEMA
 from storm_data_etl_service_spark.sources.storm_fixture import (
     BASE_TS,
     FROZEN_CLOCK,
@@ -145,13 +146,21 @@ def test_metrics_and_readiness(spark, workdir):
     assert metrics.consumed == metrics.produced + metrics.transform_errors
 
 
+def _group_jobs(sc):
+    """Spark job ids of the calling thread's job group — inside
+    ``foreachBatch`` that is the streaming query's run id — once the
+    listener bus has delivered every job-start event."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    return group, set(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_process_batch_is_single_pass(spark, workdir, monkeypatch):
-    """D9 single-pass contract: the produced count rides the sink
-    write via ``observe`` and the parse is persisted — so the only
-    ``.count()`` action per micro-batch is the cheap cache-scan poison
-    count.  Guards against reintroducing standalone actions that
-    recompute parse+enrich+dedup per batch (2-3x waste at backfill
-    batch sizes)."""
+    """Single-pass micro-batch contract: no ``count()`` action at all,
+    and per micro-batch only the sink write's Spark jobs — plus at most
+    one dead-letter job, in a batch that has poison.  The poison and
+    produced counts ride the sink write via ``observe``; a standalone
+    action would re-run the source scan and the enrichment."""
     # patch the concrete class (pyspark.sql.DataFrame is the abstract
     # base in Spark 4; instances are classic.dataframe.DataFrame)
     from pyspark.sql.classic.dataframe import DataFrame
@@ -164,13 +173,105 @@ def test_process_batch_is_single_pass(spark, workdir, monkeypatch):
         return orig_count(self)
 
     monkeypatch.setattr(DataFrame, "count", spy_count)
-    metrics = _run_pipeline(spark, workdir)
-    assert metrics.produced == 16
-    # one poison-fork count per micro-batch, nothing else: no count()
-    # over the enriched/deduped frame (that total comes from observe)
-    assert 1 <= len(counted_plans) <= metrics.batches
-    for cols in counted_plans:
-        assert "raw_value" in cols, f"unexpected count() on {cols}"
+
+    sc = spark.sparkContext
+    jobs = {}  # batch_id -> {"batch" | "sink" | "dlq": job ids}
+    groups = set()
+
+    def tracked(kind, fn):
+        # fn(..., batch_id): the kernel (self first) or a writer
+        def run(*args):
+            group, before = _group_jobs(sc)
+            groups.add(group)
+            fn(*args)
+            jobs.setdefault(args[-1], {})[kind] = _group_jobs(sc)[1] - before
+
+        return run
+
+    monkeypatch.setattr(
+        StormStreamPipeline,
+        "_process_batch",
+        tracked("batch", StormStreamPipeline._process_batch),
+    )
+    src = workdir / "src"
+    _write_stream_files(src)
+    metrics = PipelineMetrics()
+    pipe = StormStreamPipeline(
+        # one file per trigger: a poison batch and a poison-free batch
+        spark.readStream.schema(RAW_EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src)),
+        sink_writer=tracked("sink", parquet_sink(str(workdir / "out"))),
+        dlq_writer=tracked("dlq", parquet_dlq(str(workdir / "dlq"))),
+        metrics=metrics,
+        processed_at=F.lit(FROZEN_CLOCK).cast("timestamp"),
+    )
+    q = pipe.start(str(workdir / "ckpt"))
+    q.awaitTermination(120)
+    assert metrics.produced == 17  # the replay lands in the other batch
+    assert metrics.transform_errors == 1
+    assert counted_plans == []
+
+    assert groups == {str(q.runId)}
+    run_jobs = set(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert run_jobs == set().union(*(b["batch"] for b in jobs.values()))
+    assert sorted(jobs) == [0, 1]
+    assert sum("dlq" in b for b in jobs.values()) == 1
+    for b in jobs.values():
+        assert b["sink"]
+        assert len(b.get("dlq", ())) <= 1
+        assert b["batch"] == b["sink"] | b.get("dlq", set())
+
+
+def _run_spied(spark, workdir, envelopes):
+    """Drain one micro-batch of ``envelopes`` with a spy dead-letter
+    writer; returns (metrics, dead-letter calls)."""
+    src = workdir / "src"
+    src.mkdir(parents=True)
+    (src / "batch0.json").write_text("\n".join(json.dumps(e) for e in envelopes))
+    dlq_calls = []
+    dlq = parquet_dlq(str(workdir / "dlq"))
+
+    def spy_dlq(df, batch_id):
+        dlq_calls.append(batch_id)
+        dlq(df, batch_id)
+
+    metrics = PipelineMetrics()
+    pipe = StormStreamPipeline(
+        file_source(spark, str(src)),
+        sink_writer=parquet_sink(str(workdir / "out")),
+        dlq_writer=spy_dlq,
+        metrics=metrics,
+        processed_at=F.lit(FROZEN_CLOCK).cast("timestamp"),
+    )
+    q = pipe.start(str(workdir / "ckpt"))
+    q.awaitTermination(120)
+    return metrics, dlq_calls
+
+
+def test_dead_letter_writer_skipped_without_poison(spark, workdir):
+    envelopes = [_envelope(r, i) for i, r in enumerate(RAW_ROWS[:8])]
+    metrics, dlq_calls = _run_spied(spark, workdir, envelopes)
+    assert dlq_calls == []
+    assert (metrics.consumed, metrics.produced, metrics.transform_errors) == (8, 8, 0)
+    assert not (workdir / "dlq").exists()
+
+
+def test_all_poison_batch(spark, workdir):
+    n = 5
+    envelopes = [
+        {"value": _b64("{not valid json"), "topic": "storm.raw", "partition": 0,
+         "offset": i, "timestamp": BASE_TS.isoformat()}
+        for i in range(n)
+    ]
+    metrics, dlq_calls = _run_spied(spark, workdir, envelopes)
+    assert dlq_calls == [0]
+    assert spark.read.parquet(str(workdir / "out")).count() == 0
+    dead = spark.read.parquet(str(workdir / "dlq"))
+    assert sorted(r["offset"] for r in dead.collect()) == list(range(n))
+    assert (metrics.consumed, metrics.produced, metrics.transform_errors) == (n, 0, n)
+    assert (metrics.unknown_type, metrics.with_severity) == (0, 0)
+    assert metrics.ready
 
 
 def test_restart_is_idempotent(spark, workdir):
