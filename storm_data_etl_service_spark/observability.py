@@ -5,14 +5,15 @@ in-process Prometheus counters (internal/observability/metrics.go:
 20-66, emission internal/pipeline/pipeline.go:104-153).  The Spark
 equivalent is NOT a second aggregation job: ``observe`` attaches a
 CollectMetrics node that piggybacks the metrics on whatever action
-already runs the plan — zero extra scans, exact counts, and in
-streaming the same expressions surface per micro-batch in
-``StreamingQueryProgress.observedMetrics`` (the D9 listener feed).
+already runs the plan — zero extra scans, exact counts.  The
+streaming pipeline attaches ``enrichment_metric_exprs`` through an
+``Observation`` on each micro-batch's sink write
+(``StormStreamPipeline._process_batch``), and ``PipelineMetrics``
+accumulates them for ``/metrics``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -29,19 +30,3 @@ def enrichment_metric_exprs() -> list:
         F.max("measurement.magnitude").alias("max_magnitude"),
     ]
 
-
-def with_enrichment_metrics(
-    enriched: DataFrame, name: str = "enrichment"
-) -> tuple[DataFrame, Observation | None]:
-    """Attach the D9 metric set to an enriched frame.
-
-    Batch: returns (df, Observation) — read ``observation.get`` after
-    the first action.  Streaming: Observation objects are
-    batch-only, so the same expressions are attached via the named
-    ``observe`` variant and arrive in every progress event under
-    ``observedMetrics[name]``; returns (df, None).
-    """
-    if enriched.isStreaming:
-        return enriched.observe(name, *enrichment_metric_exprs()), None
-    obs = Observation(name)
-    return enriched.observe(obs, *enrichment_metric_exprs()), obs

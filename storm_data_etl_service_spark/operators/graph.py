@@ -20,8 +20,11 @@ Scale design:
   tiny diameters (pairs all share shingles), so a handful of rounds
   converge; the cap + convergence check make termination explicit;
 * lineage is cut every round (``localCheckpoint``) so the plan does
-  not grow with iterations — on a real cluster with a checkpoint dir,
-  ``checkpoint`` swaps in transparently;
+  not grow with iterations.  Every site calls ``localCheckpoint``
+  unconditionally: the staged blocks live only on the executors that
+  computed them, and with the lineage cut they cannot be recomputed,
+  so losing an executor fails the query and the whole query is
+  retried;
 * the convergence test is a single count(*) over changed labels —
   the only driver-side value per round.
 """

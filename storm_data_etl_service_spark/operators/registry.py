@@ -51,6 +51,18 @@ def _dsum(expr: str) -> str:
     return f"cast(sum(cast({expr} AS DECIMAL(25,6))) AS DOUBLE)"
 
 
+def _sha_int(sql_expr: str, start: int = 1, width: int = 8) -> str:
+    """Hex chars ``[start, start + width)`` of sha256(sql_expr) read as
+    a BIGINT (NULL in, NULL out): the one DuckDB definition of the
+    integer hash, the oracle twin of text.sha_int (and, over a salted
+    key, pipeline_ops._sha_key)."""
+    return f"('0x' || substr(sha256({sql_expr}), {start}, {width}))::BIGINT"
+
+
+#: The train/valid/test split key of pipeline_ops.dataset_split_assign.
+_SPLIT_HASH = _sha_int("'split|' || cast(doc_id AS VARCHAR)")
+
+
 # --------------------------------------------------------------------------
 # storm enrichment — the reference's whole transform chain, oracle-checked
 # over an inline VALUES fixture rendered identically on both sides.
@@ -430,7 +442,7 @@ def _minhash_oracle() -> str:
     return f"""WITH {_TOKS_CTE},
 hashed AS (
   SELECT doc_id, list_transform(shingles,
-    s -> ('0x' || substr(sha256(s), 1, 15))::BIGINT % {MINHASH_P}) AS base
+    s -> {_sha_int("s", width=15)} % {MINHASH_P}) AS base
   FROM shf),
 sig AS (SELECT doc_id, [{perms}] AS mh FROM hashed),
 bands AS (
@@ -465,8 +477,8 @@ def _simhash_oracle() -> str:
     return f"""WITH {_TOKS_CTE},
 hashed AS (
   SELECT doc_id,
-    list_transform(t, x -> ('0x' || substr(sha256(x), 1, 8))::BIGINT) AS h1,
-    list_transform(t, x -> ('0x' || substr(sha256(x), 9, 8))::BIGINT) AS h2
+    list_transform(t, x -> {_sha_int("x")}) AS h1,
+    list_transform(t, x -> {_sha_int("x", 9)}) AS h2
   FROM toks WHERE len(t) > 0)
 SELECT doc_id, {hex_expr} AS simhash FROM hashed"""
 
@@ -508,7 +520,7 @@ FROM documents"""
 _FINGERPRINT_ORACLE = f"""WITH {_TOKS_CTE},
 hashed AS (
   SELECT doc_id,
-    list_transform(t, x -> ('0x' || substr(sha256(x), 1, 15))::BIGINT % 2147483647) AS hs
+    list_transform(t, x -> {_sha_int("x", width=15)} % 2147483647) AS hs
   FROM toks)
 SELECT doc_id,
   CASE WHEN len(hs) = 0 THEN 0
@@ -1018,11 +1030,9 @@ ORDER BY revenue DESC, l_orderkey LIMIT 10""",
     ),
     "dataset_split_assign": QuerySpec(
         _t(P.dataset_split_assign),
-        "SELECT doc_id,"
-        " ('0x' || substr(sha256('split|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT"
-        " % 100 AS bucket,"
-        " CASE WHEN ('0x' || substr(sha256('split|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 80 THEN 'train'"
-        "      WHEN ('0x' || substr(sha256('split|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 90 THEN 'valid'"
+        f"SELECT doc_id, {_SPLIT_HASH} % 100 AS bucket,"
+        f" CASE WHEN {_SPLIT_HASH} % 100 < 80 THEN 'train'"
+        f"      WHEN {_SPLIT_HASH} % 100 < 90 THEN 'valid'"
         "      ELSE 'test' END AS split"
         " FROM documents",
         ("pipeline", "split"),
@@ -1496,10 +1506,10 @@ FROM freq f JOIN bi USING (doc_id)""",
     ),
     "per_source_cap_sample": QuerySpec(
         _t(P.per_source_cap_sample),
-        """WITH ranked AS (
+        f"""WITH ranked AS (
   SELECT doc_id, source,
     cast(row_number() OVER (PARTITION BY source ORDER BY
-      ('0x' || substr(sha256('cap|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT,
+      {_sha_int("'cap|' || cast(doc_id AS VARCHAR)")},
       doc_id) AS INTEGER) AS sample_rank
   FROM documents)
 SELECT doc_id, source, sample_rank FROM ranked WHERE sample_rank <= 10""",
@@ -1507,9 +1517,9 @@ SELECT doc_id, source, sample_rank FROM ranked WHERE sample_rank <= 10""",
     ),
     "sequence_pack_assign": QuerySpec(
         _t(P.sequence_pack_assign),
-        """WITH h AS (
+        f"""WITH h AS (
   SELECT doc_id, n_chars,
-    ('0x' || substr(sha256('pack|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT AS _h
+    {_sha_int("'pack|' || cast(doc_id AS VARCHAR)")} AS _h
   FROM documents),
 laid AS (
   SELECT doc_id, _h % 8 AS bucket,
@@ -1592,7 +1602,7 @@ FROM staged""",
     ),
     "corpus_curation_pipeline": QuerySpec(
         _t(P.corpus_curation_pipeline),
-        """WITH gated AS (
+        f"""WITH gated AS (
   SELECT * FROM documents WHERE n_chars >= 150 AND lang <> 'zh'),
 canonical AS (
   SELECT * FROM (
@@ -1600,8 +1610,8 @@ canonical AS (
     FROM gated) WHERE _rn = 1),
 assigned AS (
   SELECT lang, n_chars,
-    CASE WHEN ('0x' || substr(sha256('split|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-         WHEN ('0x' || substr(sha256('split|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 90 THEN 'valid'
+    CASE WHEN {_SPLIT_HASH} % 100 < 80 THEN 'train'
+         WHEN {_SPLIT_HASH} % 100 < 90 THEN 'valid'
          ELSE 'test' END AS split
   FROM canonical)
 SELECT lang, split, count(*) AS n_docs,
@@ -2083,7 +2093,7 @@ REGISTRY["cms_token_frequencies"] = QuerySpec(
 tf AS (SELECT token, count(*) AS exact_n FROM toks GROUP BY token),
 cells AS (
   SELECT token, exact_n, r,
-         ('0x' || substr(sha256('cms' || r || '|' || token), 1, 8))::BIGINT % 256 AS c
+         {_sha_int("'cms' || r || '|' || token")} % 256 AS c
   FROM tf CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS r)),
 sketch AS (
   SELECT r, c, CAST(sum(exact_n) AS BIGINT) AS cell_n
@@ -3381,7 +3391,7 @@ REGISTRY["mixture_sample_assign"] = QuerySpec(
     # doc_id draw — bit-identical in both engines, so the oracle
     # re-derives every copy count.
     _t(P.mixture_sample_assign),
-    """WITH counts AS (
+    f"""WITH counts AS (
   SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
 staged AS (
   SELECT source, n_docs,
@@ -3394,7 +3404,7 @@ rates AS (
   FROM staged),
 drawn AS (
   SELECT doc_id, d.source, boost,
-    CAST(('0x' || substr(sha256('mix|' || doc_id), 1, 8))::BIGINT % 1000000000
+    CAST({_sha_int("'mix|' || doc_id")} % 1000000000
          AS DOUBLE) / 1000000000.0 AS u
   FROM documents d JOIN rates USING (source))
 SELECT doc_id, source, boost,
@@ -3408,9 +3418,7 @@ FROM drawn""",
 
 
 _QUALITY_WEIGHT_SQL = (
-    "((('0x' || substr(sha256('qw|' || "
-    "(('0x' || substr(sha256('qf|' || x), 1, 8))::BIGINT % 4096)"
-    "), 1, 8))::BIGINT % 17) - 8)"
+    "((" + _sha_int("'qw|' || (" + _sha_int("'qf|' || x") + " % 4096)") + " % 17) - 8)"
 )
 
 REGISTRY["quality_linear_score"] = QuerySpec(
@@ -3454,12 +3462,12 @@ batch AS (SELECT doc_id, h FROM docs, s WHERE doc_id >= t0),
 ks AS (SELECT unnest([{", ".join(str(i) for i in range(D.BLOOM_HASHES))}]) AS i),
 idx AS (
   SELECT DISTINCT
-    ('0x' || substr(sha256('bloom' || i || '|' || h), 1, 8))::BIGINT
+    {_sha_int("'bloom' || i || '|' || h")}
       % {D.BLOOM_BITS} AS bit
   FROM existing CROSS JOIN ks),
 probes AS (
   SELECT doc_id, h,
-    ('0x' || substr(sha256('bloom' || i || '|' || h), 1, 8))::BIGINT
+    {_sha_int("'bloom' || i || '|' || h")}
       % {D.BLOOM_BITS} AS bit
   FROM batch CROSS JOIN ks),
 hits AS (
@@ -4029,9 +4037,9 @@ FROM per_doc GROUP BY lang""",
 
 REGISTRY["global_shuffle_order"] = QuerySpec(
     _t(P.global_shuffle_order),
-    """WITH h AS (
+    f"""WITH h AS (
   SELECT doc_id,
-    ('0x' || substr(sha256('shuffle|r3|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT
+    {_sha_int("'shuffle|r3|' || cast(doc_id AS VARCHAR)")}
       AS _h
   FROM documents),
 sharded AS (
@@ -4047,10 +4055,10 @@ FROM sharded""",
 
 REGISTRY["length_bucket_batches"] = QuerySpec(
     _t(P.length_bucket_batches),
-    """WITH laid AS (
+    f"""WITH laid AS (
   SELECT doc_id, n_chars,
     CAST(length(bin(n_chars)) - 1 AS INTEGER) AS len_bucket,
-    ('0x' || substr(sha256('lbb|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT % 4
+    {_sha_int("'lbb|' || cast(doc_id AS VARCHAR)")} % 4
       AS stream
   FROM documents),
 batched AS (
@@ -4076,7 +4084,7 @@ FROM per_batch GROUP BY len_bucket""",
 
 REGISTRY["curriculum_order"] = QuerySpec(
     _t(P.curriculum_order),
-    """WITH ranked AS (
+    f"""WITH ranked AS (
   SELECT doc_id,
     row_number() OVER (ORDER BY n_chars, doc_id) - 1 AS rn,
     count(*) OVER () AS n
@@ -4084,7 +4092,7 @@ REGISTRY["curriculum_order"] = QuerySpec(
 banded AS (
   SELECT doc_id,
     CAST((rn * 8) // n AS INTEGER) AS band,
-    ('0x' || substr(sha256('curr|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT
+    {_sha_int("'curr|' || cast(doc_id AS VARCHAR)")}
       AS _h
   FROM ranked)
 SELECT doc_id, band,
@@ -4099,7 +4107,7 @@ FROM banded""",
 
 REGISTRY["epoch_stream_order"] = QuerySpec(
     _t(P.epoch_stream_order),
-    """WITH counts AS (
+    f"""WITH counts AS (
   SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
 staged AS (
   SELECT source, n_docs,
@@ -4113,7 +4121,7 @@ rates AS (
 drawn AS (
   SELECT doc_id,
     CAST(floor(boost) + (CASE WHEN
-      CAST(('0x' || substr(sha256('mix|' || doc_id), 1, 8))::BIGINT % 1000000000
+      CAST({_sha_int("'mix|' || doc_id")} % 1000000000
            AS DOUBLE) / 1000000000.0 < boost - floor(boost) THEN 1 ELSE 0 END)
       AS BIGINT) AS n_copies
   FROM documents d JOIN rates USING (source)),
@@ -4122,9 +4130,8 @@ expanded AS (
   FROM drawn WHERE n_copies > 0),
 keyed AS (
   SELECT doc_id, CAST(copy AS INTEGER) AS copy,
-    ('0x' || substr(sha256(
-       'epoch|' || cast(copy AS VARCHAR) || '|' || cast(doc_id AS VARCHAR)
-     ), 1, 8))::BIGINT AS _h
+    {_sha_int("'epoch|' || cast(copy AS VARCHAR) || '|' || cast(doc_id AS VARCHAR)")}
+      AS _h
   FROM expanded)
 SELECT doc_id, copy,
   CAST((_h * 16) // 4294967296 AS INTEGER) AS shard,
@@ -4137,9 +4144,9 @@ FROM keyed""",
 
 REGISTRY["stratified_sample"] = QuerySpec(
     _t(P.stratified_sample),
-    """WITH h AS (
+    f"""WITH h AS (
   SELECT doc_id, source,
-    ('0x' || substr(sha256('strat|' || cast(doc_id AS VARCHAR)), 1, 8))::BIGINT
+    {_sha_int("'strat|' || cast(doc_id AS VARCHAR)")}
       AS _h
   FROM documents),
 ranked AS (
@@ -4224,7 +4231,7 @@ bigrams AS (
   FROM tl WHERE len(ts) >= 2),
 dc AS (
   SELECT doc_id,
-    ('0x' || substr(sha256(bigram), 1, 8))::BIGINT % 4096 AS bucket,
+    {_sha_int("bigram")} % 4096 AS bucket,
     count(*) AS c, max(lang) AS lang
   FROM bigrams GROUP BY 1, 2),
 raw AS (SELECT bucket, cast(sum(c) AS BIGINT) AS c_raw FROM dc GROUP BY bucket),
@@ -4307,8 +4314,8 @@ counts AS (
   FROM tl GROUP BY source),
 capped AS (
   SELECT source, n_tokens,
-    ('0x' || substr(sha256(source), 1, 8))::BIGINT % 3 + 1 AS cap_mult,
-    (('0x' || substr(sha256(source), 1, 8))::BIGINT % 3 + 1) * n_tokens
+    {_sha_int("source")} % 3 + 1 AS cap_mult,
+    ({_sha_int("source")} % 3 + 1) * n_tokens
       AS cap_tokens
   FROM counts),
 staged AS (

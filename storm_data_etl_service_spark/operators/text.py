@@ -141,10 +141,13 @@ def text_lang_id(t) -> DataFrame:
     )
 
 
-def token_hash(tok: Column) -> Column:
-    """Portable 60-bit token hash: first 15 hex chars of sha256 as an
-    integer (DuckDB twin: ``('0x' || substr(sha256(t),1,15))::BIGINT``)."""
-    return F.conv(F.substring(F.sha2(tok, 256), 1, 15), 16, 10).cast("long")
+def sha_int(c: Column, start: int = 1, width: int = 8) -> Column:
+    """Portable integer hash: hex chars ``[start, start + width)`` of
+    sha256(c) read as a BIGINT (width 8 gives [0, 2^32), width 15 a
+    60-bit value; NULL in, NULL out).  The one Spark definition of the
+    format every oracle-checked hash key, split, sketch cell and Bloom
+    bit rests on; its DuckDB twin is ``registry._sha_int``."""
+    return F.conv(F.substring(F.sha2(c, 256), start, width), 16, 10).cast("long")
 
 
 #: BPE-ish pre-tokenizer regex (GPT-2 style, lookahead-free so it runs
@@ -193,7 +196,7 @@ def text_fingerprint(t) -> DataFrame:
     return (
         t["documents"]
         .withColumn("_toks", tokens_col(F.col("text")))
-        .withColumn("_hs", F.transform(F.col("_toks"), lambda x: token_hash(x) % FP_MOD))
+        .withColumn("_hs", F.transform(F.col("_toks"), lambda x: sha_int(x, width=15) % FP_MOD))
         .select("doc_id", F.coalesce(folded, F.lit(0).cast("long")).alias("fingerprint"))
     )
 
@@ -356,11 +359,7 @@ def cms_token_frequencies(t, top_n: int = 20) -> DataFrame:
     tf = toks.groupBy("token").agg(F.count("*").alias("exact_n"))
 
     def cell(r: int) -> Column:
-        h = F.conv(
-            F.substring(F.sha2(F.concat(F.lit(f"cms{r}|"), F.col("token")), 256), 1, 8),
-            16,
-            10,
-        ).cast("long")
+        h = sha_int(F.concat(F.lit(f"cms{r}|"), F.col("token")))
         return F.struct(F.lit(r).cast("int").alias("r"), (h % CMS_WIDTH).alias("c"))
 
     cells = tf.select(
@@ -1115,21 +1114,9 @@ def _linear_gate_exprs() -> tuple[Column, Column, Column, Column]:
     Gopher rules in ONE projection instead of two scans + a join)."""
 
     def weight(x: Column) -> Column:
-        bucket = (
-            F.conv(
-                F.substring(F.sha2(F.concat(F.lit("qf|"), x), 256), 1, 8), 16, 10
-            ).cast("long")
-            % QUALITY_BUCKETS
-        )
+        bucket = sha_int(F.concat(F.lit("qf|"), x)) % QUALITY_BUCKETS
         return (
-            F.conv(
-                F.substring(
-                    F.sha2(F.concat(F.lit("qw|"), bucket.cast("string")), 256), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long")
-            % QUALITY_WEIGHT_SPAN
+            sha_int(F.concat(F.lit("qw|"), bucket.cast("string"))) % QUALITY_WEIGHT_SPAN
         ) - (QUALITY_WEIGHT_SPAN // 2)
 
     n_feats = F.size("_feats").cast("long")
@@ -1382,9 +1369,7 @@ def dsir_importance_weights(t) -> DataFrame:
             ).otherwise(F.array().cast("array<string>"))
         ).alias("bigram"),
     )
-    bucket = F.conv(F.substring(F.sha2(F.col("bigram"), 256), 1, 8), 16, 10).cast(
-        "long"
-    ) % F.lit(DSIR_BUCKETS)
+    bucket = sha_int(F.col("bigram")) % F.lit(DSIR_BUCKETS)
     feats = pairs.select(
         "doc_id",
         "lang",

@@ -130,18 +130,20 @@ def test_file_service_pipeline_end_to_end(spark, workdir):
 def test_observe_metrics_piggyback_on_single_pass(spark):
     """D9 via DataFrame.observe: exact counters ride the existing
     action (CollectMetrics), matching independently-computed values."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from storm_data_etl_service_spark.functions.enrich import enrich
     from storm_data_etl_service_spark.observability import (
-        with_enrichment_metrics,
+        enrichment_metric_exprs,
     )
     from storm_data_etl_service_spark.sources.storm_fixture import (
         spark_fixture_df,
     )
 
     enriched = enrich(spark_fixture_df(spark))
-    observed, obs = with_enrichment_metrics(enriched)
+    obs = Observation("enrichment")
+    observed = enriched.observe(obs, *enrichment_metric_exprs())
     observed.write.format("noop").mode("overwrite").save()
     got = obs.get
     assert got["n_records"] == enriched.count()

@@ -2324,3 +2324,57 @@ def test_duckdb_tokenizer_equals_tokens_col(spark):
     for case, srow in zip(cases, spark_rows):
         dts = con.execute(f"SELECT {_TOKENIZE} FROM (SELECT ?::VARCHAR AS text)", [case]).fetchone()[0]
         assert srow["ts"] == dts, (case, srow["ts"], dts)
+
+
+def test_sha_int_twins_agree(spark):
+    """The integer hash is one format on both engines: Spark
+    text.sha_int and pipeline_ops._sha_key, DuckDB registry._sha_int
+    and a plain hashlib hex prefix agree bit-for-bit on every width and
+    offset the operators use, on empty and non-ASCII input and on a
+    salted multi-column key; NULL hashes to NULL on both engines."""
+    import hashlib
+
+    import duckdb
+
+    from storm_data_etl_service_spark.operators.pipeline_ops import _sha_key
+    from storm_data_etl_service_spark.operators.registry import _sha_int
+    from storm_data_etl_service_spark.operators.text import sha_int
+
+    def py_sha_int(s, start=1, width=8):
+        if s is None:
+            return None
+        return int(hashlib.sha256(s.encode()).hexdigest()[start - 1 : start - 1 + width], 16)
+
+    con = duckdb.connect()
+    texts = ["", "doc 42", "Zürich — 東京 ⛈ naïve", None]
+    shapes = [(1, 8), (1, 15), (9, 8)]
+    srows = (
+        spark.createDataFrame(list(enumerate(texts)), "i int, s string")
+        .select("i", *[sha_int(F.col("s"), st, w).alias(f"h{st}_{w}") for st, w in shapes])
+        .orderBy("i")
+        .collect()
+    )
+    for s, srow in zip(texts, srows):
+        for st, w in shapes:
+            duck = con.execute(
+                f"SELECT {_sha_int('s', st, w)} FROM (SELECT ?::VARCHAR AS s)", [s]
+            ).fetchone()[0]
+            want = py_sha_int(s, st, w)
+            assert srow[f"h{st}_{w}"] == duck == want, (s, st, w, srow, duck, want)
+    assert srows[-1]["h1_8"] is None
+
+    keys = [(3, "x"), (0, ""), (7, "東京"), (5, None)]
+    krows = (
+        spark.createDataFrame(list(enumerate(keys)), "i int, k struct<a:int,b:string>")
+        .select("i", _sha_key("epoch|", F.col("k.a"), F.col("k.b")).alias("h"))
+        .orderBy("i")
+        .collect()
+    )
+    salted = _sha_int("'epoch|' || cast(a AS VARCHAR) || '|' || cast(b AS VARCHAR)")
+    for (a, b), krow in zip(keys, krows):
+        duck = con.execute(
+            f"SELECT {salted} FROM (SELECT ?::INTEGER AS a, ?::VARCHAR AS b)", [a, b]
+        ).fetchone()[0]
+        want = None if b is None else py_sha_int(f"epoch|{a}|{b}")
+        assert krow["h"] == duck == want, (a, b, krow["h"], duck, want)
+    assert krows[-1]["h"] is None
